@@ -15,8 +15,8 @@
  * and the correlation path is the running sum cc0 + t1_0 + t2_0 + t1_1 ...
  * observed after each t2 (the reference's two-add loop, src/mpx.cpp:944).
  *
- * Rows are processed in groups of 4 with interleaved accumulators so the
- * four independent serial add chains hide FP add latency; per-row op order
+ * Rows are processed in groups of 8, then 4, with interleaved accumulators
+ * so the independent serial add chains hide FP add latency; per-row op order
  * is untouched (only instruction scheduling ACROSS independent rows
  * changes, which cannot affect any row's bits).
  */
@@ -33,6 +33,33 @@ static void row1(const double *A, const double *z, const double *sig,
     }
 }
 
+/* W consecutive diagonal rows starting at row i, W a compile-time constant
+ * at every call site (always_inline + constant trip counts let gcc unroll
+ * the r loops and keep a[] in registers). Per-row op order is row1's:
+ * the f1 add, then the f2 add, then (acc * s) * g. */
+static inline __attribute__((always_inline)) void
+rows_w(const double *A, const double *Z, const double *sig,
+       const double *sgp, const double *cc0, double *c_all,
+       long maxoff, long d0, long ldc, long i, const int W)
+{
+    const double *z = Z + 2 * (d0 + i);
+    const double *g = sgp + d0 + i;
+    double *c = c_all + i * ldc;
+    double a[8];
+    for (int r = 0; r < W; r++)
+        a[r] = cc0[i + r];
+    for (long k = 0; k < maxoff; k++) {
+        double f1 = A[2 * k], f2 = A[2 * k + 1];
+        double s = sig[k];
+        for (int r = 0; r < W; r++)
+            a[r] += f1 * z[2 * r + 2 * k];
+        for (int r = 0; r < W; r++)
+            a[r] += f2 * z[2 * r + 2 * k + 1];
+        for (int r = 0; r < W; r++)
+            c[r * ldc + k] = (a[r] * s) * g[k + r];
+    }
+}
+
 void mpx_fused(const double *A, const double *Z, const double *sig,
                const double *sgp, const double *cc0, double *c_all,
                long B, long maxoff, long d0, long ldc)
@@ -46,85 +73,10 @@ void mpx_fused(const double *A, const double *Z, const double *sig,
      * drops 748 -> 573M pairs/s from 1 to 32 processes at 4-wide).
      * Per-diagonal op order is untouched — each accumulator chain is
      * independent — so results are bit-identical (gated + pytested). */
-    for (; i + 8 <= B; i += 8) {
-        const double *z0 = Z + 2 * (d0 + i);
-        const double *z1 = z0 + 2;
-        const double *z2 = z0 + 4;
-        const double *z3 = z0 + 6;
-        const double *z4 = z0 + 8;
-        const double *z5 = z0 + 10;
-        const double *z6 = z0 + 12;
-        const double *z7 = z0 + 14;
-        const double *g0 = sgp + d0 + i;
-        double *c0 = c_all + i * ldc;
-        double *c1 = c0 + ldc;
-        double *c2 = c1 + ldc;
-        double *c3 = c2 + ldc;
-        double *c4 = c3 + ldc;
-        double *c5 = c4 + ldc;
-        double *c6 = c5 + ldc;
-        double *c7 = c6 + ldc;
-        double a0 = cc0[i],     a1 = cc0[i + 1];
-        double a2 = cc0[i + 2], a3 = cc0[i + 3];
-        double a4 = cc0[i + 4], a5 = cc0[i + 5];
-        double a6 = cc0[i + 6], a7 = cc0[i + 7];
-        for (long k = 0; k < maxoff; k++) {
-            double f1 = A[2 * k], f2 = A[2 * k + 1];
-            double s = sig[k];
-            a0 += f1 * z0[2 * k];
-            a1 += f1 * z1[2 * k];
-            a2 += f1 * z2[2 * k];
-            a3 += f1 * z3[2 * k];
-            a4 += f1 * z4[2 * k];
-            a5 += f1 * z5[2 * k];
-            a6 += f1 * z6[2 * k];
-            a7 += f1 * z7[2 * k];
-            a0 += f2 * z0[2 * k + 1];
-            a1 += f2 * z1[2 * k + 1];
-            a2 += f2 * z2[2 * k + 1];
-            a3 += f2 * z3[2 * k + 1];
-            a4 += f2 * z4[2 * k + 1];
-            a5 += f2 * z5[2 * k + 1];
-            a6 += f2 * z6[2 * k + 1];
-            a7 += f2 * z7[2 * k + 1];
-            c0[k] = (a0 * s) * g0[k];
-            c1[k] = (a1 * s) * g0[k + 1];
-            c2[k] = (a2 * s) * g0[k + 2];
-            c3[k] = (a3 * s) * g0[k + 3];
-            c4[k] = (a4 * s) * g0[k + 4];
-            c5[k] = (a5 * s) * g0[k + 5];
-            c6[k] = (a6 * s) * g0[k + 6];
-            c7[k] = (a7 * s) * g0[k + 7];
-        }
-    }
-    for (; i + 4 <= B; i += 4) {
-        const double *z0 = Z + 2 * (d0 + i);
-        const double *z1 = z0 + 2;
-        const double *z2 = z0 + 4;
-        const double *z3 = z0 + 6;
-        const double *g0 = sgp + d0 + i;
-        double *c0 = c_all + i * ldc;
-        double *c1 = c0 + ldc;
-        double *c2 = c1 + ldc;
-        double *c3 = c2 + ldc;
-        double a0 = cc0[i], a1 = cc0[i + 1], a2 = cc0[i + 2], a3 = cc0[i + 3];
-        for (long k = 0; k < maxoff; k++) {
-            double f1 = A[2 * k], f2 = A[2 * k + 1];
-            double s = sig[k];
-            a0 += f1 * z0[2 * k];
-            a1 += f1 * z1[2 * k];
-            a2 += f1 * z2[2 * k];
-            a3 += f1 * z3[2 * k];
-            a0 += f2 * z0[2 * k + 1];
-            a1 += f2 * z1[2 * k + 1];
-            a2 += f2 * z2[2 * k + 1];
-            a3 += f2 * z3[2 * k + 1];
-            c0[k] = (a0 * s) * g0[k];
-            c1[k] = (a1 * s) * g0[k + 1];
-            c2[k] = (a2 * s) * g0[k + 2];
-            c3[k] = (a3 * s) * g0[k + 3];
-        }
-    }
+    for (; i + 8 <= B; i += 8)
+        rows_w(A, Z, sig, sgp, cc0, c_all, maxoff, d0, ldc, i, 8);
+    for (; i + 4 <= B; i += 4)
+        rows_w(A, Z, sig, sgp, cc0, c_all, maxoff, d0, ldc, i, 4);
     for (; i < B; i++)
         row1(A, Z + 2 * (d0 + i), sig, sgp + d0 + i, cc0[i],
              c_all + i * ldc, maxoff);

@@ -58,14 +58,6 @@ def _is_integral(x: np.ndarray) -> bool:
     return bool((x == np.floor(x)).all())
 
 
-def _seqsum(a: np.ndarray) -> float:
-    """Strictly sequential left-to-right sum (matches C++ accumulate /
-    Rcpp sugar sum, unlike numpy's pairwise ``np.sum``)."""
-    if a.size == 0:
-        return 0.0
-    return float(np.cumsum(a)[-1])
-
-
 def movsum_ogita(data, window_size: int) -> np.ndarray:
     """Ogita-compensated moving sum (src/windowfunc.cpp:147-180).
 

@@ -1,12 +1,15 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` payloads with
-typed metadata, processed by Arrow-batched kernels over ``mapInPandas``.
+"""Multimodal columns: image/audio as opaque ``binary`` payloads with typed
+metadata, processed by Arrow-batched kernels over ``mapInPandas``.
 
-The container has no image/audio codecs, so the DECODE step is stubbed —
-``decode_image`` raises NotImplementedError unless ``fake=True``, in which
-case a deterministic fake decoder (seeded by the payload digest) produces
-pixel arrays of the declared shape. Everything around the stub — schema,
-batch shape, partitioning, UDF signatures, feature extraction on the
-decoded arrays — is real and tested (tests/test_multimodal.py).
+The engine decodes no real media. ``decode_image``/``decode_audio`` are
+deterministic fake decoders: mode='tile' repeats the payload bytes (the
+closed-form decoder the oracle faces replicate in SQL) and mode='philox'
+seeds a counter RNG from the payload digest. Both refuse a payload that
+carries a real-media magic (PNG, JPEG, BMP, WAV, FLAC) with
+NotImplementedError, so a real file is never faked silently. Everything
+around the decode step — schema, batch shape, partitioning, UDF
+signatures, feature extraction on the decoded arrays — is real and tested
+(tests/test_multimodal.py).
 
 Schema of a media table:
     media_id: string, kind: string ('image'|'audio'), payload: binary,
@@ -71,57 +74,45 @@ def synth_media_df(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
     return spark.range(0, n, 1, 4).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
+# Magic-byte predicates of the real media formats. A 2-byte "BM" alone is
+# weak against arbitrary binary payloads, so BMP also needs the header's
+# file-size field to match the payload length.
+_MEDIA_MAGICS = {
+    "PNG": lambda p: p[:8] == b"\x89PNG\r\n\x1a\n",
+    "JPEG": lambda p: p[:3] == b"\xFF\xD8\xFF",  # SOI + first marker
+    "BMP": lambda p: (p[:2] == b"BM" and len(p) >= 6
+                      and int.from_bytes(p[2:6], "little") == len(p)),
+    "WAV": lambda p: p[:4] == b"RIFF" and p[8:12] == b"WAVE",
+    "FLAC": lambda p: p[:4] == b"fLaC",
+}
+
+
+def _refuse_real_media(payload: bytes) -> None:
+    for fmt, matches in _MEDIA_MAGICS.items():
+        if matches(payload):
+            raise NotImplementedError(
+                f"payload is a {fmt} file; this engine has no real media "
+                "decoders, only the deterministic fake ones"
+            )
+
+
 def decode_image(payload: bytes, width: int, height: int, channels: int,
                  fake: bool = False, mode: str = "philox") -> np.ndarray:
-    """Decode an image payload.
+    """Fake-decode an image payload to a uint8 (height, width, channels)
+    array.
 
-    REAL paths: BMP (24-bit uncompressed), PNG (8-bit gray/RGB/palette/
-    GA/RGBA, all five row filters, CRC-checked — DEFLATE via the stdlib
-    zlib) and JPEG (sequential SOF0/SOF1 AND progressive SOF2, any
-    chroma sampling, restart intervals — pure-Python Huffman + matrix
-    IDCT, codecs/jpeg.py) are parsed by in-repo dependency-free codecs,
-    magic-byte detected, no flag needed. Arithmetic-coded JPEG refuses
-    loudly.
+    ``fake=True`` is required: mode='philox' seeds a counter RNG from the
+    payload digest; mode='tile' repeats the payload bytes row-major (the
+    closed-form decoder any engine can replicate — the oracle face).
 
-    ``fake=True`` yields a deterministic uint8 array of the declared
-    shape for other payloads: mode='philox' seeds a counter RNG from
-    the payload digest; mode='tile' repeats the payload bytes row-major
-    (the closed-form decoder any engine can replicate — the oracle
-    face)."""
-    # 2-byte magic alone is weak vs arbitrary binary payloads; also require
-    # the BMP header's file-size field to match before routing to the codec
-    if (payload[:2] == b"BM" and len(payload) >= 6
-            and int.from_bytes(payload[2:6], "little") == len(payload)):
-        from ..codecs.media import parse_bmp
-
-        return parse_bmp(payload)
-    from ..codecs.media import PNG_SIG
-
-    img = None
-    if payload[: len(PNG_SIG)] == PNG_SIG:  # 8-byte magic: unambiguous
-        from ..codecs.media import parse_png
-
-        img = parse_png(payload)
-    elif payload[:3] == b"\xFF\xD8\xFF":  # JPEG SOI + first marker
-        from ..codecs.jpeg import parse_jpeg
-
-        img = parse_jpeg(payload)
-    if img is not None:
-        # normalize to the (h, w, 3) RGB contract every other decode
-        # path returns (the feature kernels reduce over axis 2): gray ->
-        # replicate to 3 channels, gray+alpha/RGBA -> drop alpha
-        if img.ndim == 2:
-            return np.repeat(img[:, :, None], 3, axis=2)
-        if img.shape[2] == 2:
-            return np.repeat(img[:, :, :1], 3, axis=2)
-        if img.shape[2] == 4:
-            return np.ascontiguousarray(img[:, :, :3])
-        return img
+    Raises NotImplementedError for a payload with a real-media magic
+    (PNG, JPEG, BMP, WAV, FLAC), whatever ``fake`` is, and for any payload
+    when ``fake`` is False."""
+    _refuse_real_media(payload)
     if not fake:
         raise NotImplementedError(
-            "BMP/PNG/baseline-JPEG decode natively; other image formats "
-            "are not supported in this environment — pass fake=True for "
-            "the deterministic test decoder"
+            "no image decoder in this engine — pass fake=True for the "
+            "deterministic test decoder"
         )
     n = height * width * channels
     if mode == "tile":
@@ -136,36 +127,20 @@ def decode_image(payload: bytes, width: int, height: int, channels: int,
 
 def decode_audio(payload: bytes, n_samples: int, fake: bool = False,
                  mode: str = "philox") -> np.ndarray:
-    """Decode an audio payload to a float32 mono waveform in [-1, 1).
+    """Fake-decode an audio payload to a float32 mono waveform in [-1, 1).
 
-    REAL paths: WAV (RIFF PCM 8/16-bit) and FLAC
-    (CONSTANT/VERBATIM/FIXED/LPC subframes, Rice residuals incl.
-    escapes, all stereo decorrelation modes, CRC-verified — see
-    codecs/flac.py) are parsed by in-repo dependency-free codecs,
-    magic-byte detected; multi-channel mixes down by mean. MP3/OGG
-    would need external entropy/transform codecs, so they remain a
-    declared stub.
+    ``fake=True`` is required: mode='tile' maps tiled payload bytes to
+    (b - 128) / 128 — closed-form for the oracle face; mode='philox'
+    draws uniform samples from a counter RNG seeded by the payload digest.
 
-    ``fake=True`` for other payloads: mode='tile' maps tiled payload
-    bytes to (b - 128) / 128 — closed-form for the oracle face."""
-    x = None
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        from ..codecs.media import parse_wav
-
-        x, _sr = parse_wav(payload)
-    elif payload[:4] == b"fLaC":
-        from ..codecs.flac import parse_flac
-
-        x, _sr = parse_flac(payload)
-    if x is not None:
-        return x.mean(axis=1, dtype=np.float64).astype(np.float32) \
-            if x.shape[1] > 1 else x[:, 0]
+    Raises NotImplementedError for a payload with a real-media magic
+    (PNG, JPEG, BMP, WAV, FLAC), whatever ``fake`` is, and for any payload
+    when ``fake`` is False."""
+    _refuse_real_media(payload)
     if not fake:
         raise NotImplementedError(
-            "only WAV-PCM and FLAC (fixed-predictor subset) decode "
-            "natively; other audio codecs are not installed in this "
-            "environment — pass fake=True for the deterministic test "
-            "decoder"
+            "no audio decoder in this engine — pass fake=True for the "
+            "deterministic test decoder"
         )
     if mode == "tile":
         b = np.frombuffer(payload, dtype=np.uint8)

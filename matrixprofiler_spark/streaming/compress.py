@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import __version__
-from ..codecs import dod_decode, dod_decode_many, dod_encode, dod_encode_many
+from ..codecs import dod_decode, dod_decode_many, dod_encode_many
 from .checkpoint import read_manifest
 from .expiry import RetentionExpiryJob
 
@@ -116,35 +116,6 @@ _FINE_OUT_SCHEMA = T.StructType(
         T.StructField("max_v", T.IntegerType(), False),
     ]
 )
-
-
-def _pack_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Reference single-group packer (kept as the batch path's semantic
-    spec; the job itself uses :func:`_pack_segments_batch`, which is
-    blob-identical — dod_encode_many == dod_encode per series)."""
-    pdf = pdf.sort_values("bucket")
-    blobs = {c: dod_encode(pdf[c].to_numpy(dtype=np.int64))
-             for c in _STAT_COLS}
-    b = pdf["bucket"].to_numpy(dtype=np.int64)
-    return pd.DataFrame(
-        {
-            "doc_id": [pdf["doc_id"].iloc[0]],
-            "source": [pdf["source"].iloc[0]],
-            "chunk": [int(pdf["chunk"].iloc[0])],
-            "n_rows": [len(pdf)],
-            "b_min": [int(b[0])],
-            "b_max": [int(b[-1])],
-            "v_min": [int(pdf["min_v"].min())],
-            "v_max": [int(pdf["max_v"].max())],
-            "bucket_blob": [blobs["bucket"]],
-            "cnt_blob": [blobs["cnt"]],
-            "sum_blob": [blobs["sum_v"]],
-            "sumsq_blob": [blobs["sumsq"]],
-            "min_blob": [blobs["min_v"]],
-            "max_blob": [blobs["max_v"]],
-            "blob_bytes": [sum(len(v) for v in blobs.values())],
-        }
-    )
 
 
 def _pack_segments_batch(batches):

@@ -5,7 +5,6 @@ denormals, infinities and NaN payloads."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from matrixprofiler_spark.codecs import (
     dod_decode,
@@ -98,21 +97,6 @@ def test_dod_bucket_boundaries():
               -2048, 2049, 10**12, -(10**12)]
     x = np.cumsum(np.cumsum(np.array(deltas, dtype=np.int64)))
     roundtrip_i64(x)
-
-
-def test_png_truncated_chunk_raises_valueerror():
-    """A chunk whose declared length runs past the buffer must hit the
-    codec's corrupt-payload contract (ValueError), not struct.error."""
-    import struct
-
-    import pytest
-
-    from matrixprofiler_spark.codecs.media import PNG_SIG, parse_png
-
-    # a single chunk header claiming 10^6 body bytes that aren't there
-    payload = PNG_SIG + struct.pack(">I", 1_000_000) + b"IHDR" + b"\x00" * 8
-    with pytest.raises(ValueError, match="truncated PNG chunk"):
-        parse_png(payload)
 
 
 def test_dod_decode_many_matches_scalar_decoder():
