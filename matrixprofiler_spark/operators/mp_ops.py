@@ -23,6 +23,8 @@ from pyspark.sql import types as T
 
 from ..codecs import dod_encode, gorilla_encode
 from ..kernels.mp import mpx, stomp
+from .arrow_docs import map_docs
+from .mp_exact import _win_stats
 
 MP_BLOBS_SCHEMA = T.StructType(
     [
@@ -167,15 +169,8 @@ def _tile_partial_minima(ai, bi, gi, gj, w, exclusion, both_sides,
     Returns (dmin, nn, ok_a, dmin_c, nn_c, ok_b); the col side is None
     unless both_sides."""
     na, nb = ai.size - w + 1, bi.size - w + 1
-    ca = np.concatenate(([np.int64(0)], np.cumsum(ai)))
-    ca2 = np.concatenate(([np.int64(0)], np.cumsum(ai * ai)))
-    mu_a = (ca[w:] - ca[:-w]) / float(w)
-    cb = np.concatenate(([np.int64(0)], np.cumsum(bi)))
-    cb2 = np.concatenate(([np.int64(0)], np.cumsum(bi * bi)))
-    mu_b = (cb[w:] - cb[:-w]) / float(w)
-    with np.errstate(invalid="ignore"):
-        sd_a = np.sqrt((ca2[w:] - ca2[:-w]) / float(w) - mu_a * mu_a)
-        sd_b = np.sqrt((cb2[w:] - cb2[:-w]) / float(w) - mu_b * mu_b)
+    _, _, mu_a, sd_a = _win_stats(ai, w)
+    _, _, mu_b, sd_b = _win_stats(bi, w)
     ok_a = sd_a > 0
     ok_b = sd_b > 0
     wmua_full = w * mu_a
@@ -251,7 +246,8 @@ def matrix_profile_distributed(tokens_df: DataFrame, w: int, ez: float = 0.5,
     self-joined per doc — only the upper triangle b_off >= a_off is
     materialized; each tile computes its exact-integer distance block in
     one Arrow task (row-blocked dgemm + fused expression,
-    _tile_partial_minima) and emits per-ROW partial minima AND per-COLUMN
+    _tile_partial_minima, run per tile row by arrow_docs.map_docs) and
+    emits per-ROW partial minima AND per-COLUMN
     partial minima (the mirrored tile's rows, by symmetry of the distance
     matrix), halving both the shuffle and the compute. A
     map-side-combinable groupBy(doc, off) min-merge produces the global
@@ -270,12 +266,13 @@ def matrix_profile_distributed(tokens_df: DataFrame, w: int, ez: float = 0.5,
     from .rollup import chunk_tokens
 
     exclusion = c_round(w * ez + np.finfo(np.float64).eps)
+    eligible = F.col("n_tok") >= 2 * w
     # equalize: per-doc stride ceil(n_win/n_chunks) instead of a fixed
     # chunk_len, so a doc just past a chunk_len multiple cannot emit a
     # near-empty sliver chunk (which would pair with EVERY other chunk of
     # its doc, paying full tile setup + Arrow transfer of the partner
     # array for a handful of windows); results are chunk-invariant
-    chunks = chunk_tokens(tokens_df.filter(F.size("tokens") >= 2 * w), w,
+    chunks = chunk_tokens(tokens_df.filter(eligible), w,
                           chunk_len, equalize=True)
     a = chunks.select(
         "doc_id", F.col("chunk_off").alias("a_off"), F.col("tokens").alias("a_tok")
@@ -297,7 +294,7 @@ def matrix_profile_distributed(tokens_df: DataFrame, w: int, ez: float = 0.5,
         nw = F.col("n_tok").cast("double") - float(w - 1)
         c = F.greatest(F.ceil(nw / float(chunk_len)), F.lit(1)).cast("double")
         n_tiles = (
-            tokens_df.filter(F.col("n_tok") >= 2 * w)
+            tokens_df.filter(eligible)
             .agg(F.sum(c * (c + 1.0) / 2.0))
             .collect()[0][0]
         ) or 0.0
@@ -321,63 +318,37 @@ def matrix_profile_distributed(tokens_df: DataFrame, w: int, ez: float = 0.5,
         ]
     )
 
-    def tile_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            parts = []
-            for doc_id, a_off, a_tok, b_off, b_tok in zip(
-                batch["doc_id"], batch["a_off"], batch["a_tok"],
-                batch["b_off"], batch["b_tok"],
-            ):
-                ai = np.asarray(a_tok, dtype=np.int64)
-                bi = np.asarray(b_tok, dtype=np.int64)
-                na, nb = ai.size - w + 1, bi.size - w + 1
-                if na <= 0 or nb <= 0:
-                    continue
-                gi = int(a_off) + np.arange(na)   # global window offsets
-                gj = int(b_off) + np.arange(nb)
-                # skip tiles that lie entirely inside the exclusion band
-                if max(abs(gi[0] - gj[-1]), abs(gi[-1] - gj[0])) <= exclusion:
-                    continue
-                both = int(b_off) > int(a_off)
-                dmin, nn, ok_a, dmin_c, nn_c, ok_b = _tile_partial_minima(
-                    ai, bi, gi, gj, w, exclusion, both
-                )
-                fin = np.isfinite(dmin) & ok_a
-                if fin.any():
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                "doc_id": doc_id,
-                                "off": gi[fin].astype(np.int32),
-                                "d": dmin[fin],
-                                "nn": nn[fin].astype(np.int32),
-                            }
-                        )
-                    )
-                if both:
-                    # mirrored tile by symmetry: column minima serve the
-                    # b-side windows; ties resolve to the smallest row
-                    # offset — exactly what the mirrored tile's row argmin
-                    # would have produced
-                    fin_c = np.isfinite(dmin_c) & ok_b
-                    if fin_c.any():
-                        parts.append(
-                            pd.DataFrame(
-                                {
-                                    "doc_id": doc_id,
-                                    "off": gj[fin_c].astype(np.int32),
-                                    "d": dmin_c[fin_c],
-                                    "nn": nn_c[fin_c].astype(np.int32),
-                                }
-                            )
-                        )
-            yield (
-                pd.concat(parts, ignore_index=True)
-                if parts
-                else pd.DataFrame({f.name: pd.Series(dtype=object) for f in part_schema.fields})
-            )
+    def tile(a_off, a_tok, b_off, b_tok):
+        ai = np.asarray(a_tok, dtype=np.int64)
+        bi = np.asarray(b_tok, dtype=np.int64)
+        na, nb = ai.size - w + 1, bi.size - w + 1
+        if na <= 0 or nb <= 0:
+            return None
+        gi = int(a_off) + np.arange(na)   # global window offsets
+        gj = int(b_off) + np.arange(nb)
+        # skip tiles that lie entirely inside the exclusion band
+        if max(abs(gi[0] - gj[-1]), abs(gi[-1] - gj[0])) <= exclusion:
+            return None
+        both = int(b_off) > int(a_off)
+        dmin, nn, ok_a, dmin_c, nn_c, ok_b = _tile_partial_minima(
+            ai, bi, gi, gj, w, exclusion, both
+        )
+        fin = np.isfinite(dmin) & ok_a
+        off, d, near = [gi[fin]], [dmin[fin]], [nn[fin]]
+        if both:
+            # mirrored tile by symmetry: column minima serve the b-side
+            # windows; ties resolve to the smallest row offset — exactly
+            # what the mirrored tile's row argmin would have produced
+            fin_c = np.isfinite(dmin_c) & ok_b
+            off.append(gj[fin_c])
+            d.append(dmin_c[fin_c])
+            near.append(nn_c[fin_c])
+        return {"off": np.concatenate(off).astype(np.int32),
+                "d": np.concatenate(d),
+                "nn": np.concatenate(near).astype(np.int32)}
 
-    partials = tiles.mapInPandas(tile_kernel, schema=part_schema)
+    partials = map_docs(tiles, "doc_id", ["a_off", "a_tok", "b_off", "b_tok"],
+                        tile, part_schema)
     # global min-merge; struct min orders (d, nn) lexicographically ->
     # identical tie-break (smallest neighbor) to the one-task face
     merged = partials.groupBy("doc_id", "off").agg(

@@ -1,32 +1,33 @@
 """Long-format sliding-window statistics and similarity-join operators over
 the tokens table — the oracle-checkable query surface.
 
-Every operator is a vectorized Arrow kernel (mapInPandas) running the real
-numpy kernels from matrixprofiler_spark.kernels per doc; no per-row Python.
+Every operator is a per-doc function of the doc's tokens run through the
+package's one Arrow adapter (``arrow_docs.map_docs``): the real numpy
+kernels from matrixprofiler_spark.kernels per doc; no per-row Python.
 
 Exactness: on integer token data the kernels' sliding sums are exact int64,
 and with w a power of two the derived mean/std/sig are computed by the same
 IEEE double expression an ANSI-SQL oracle uses, so results are bit-identical
 to DuckDB — the driver's value-hash comparison passes without rounding.
 
-Batch assembly (r7): each kernel gathers its per-doc numpy outputs and
-emits ONE DataFrame per Arrow batch. The former one-DataFrame-per-doc
-shape paid ~1 ms of pandas construction per doc — more than the kernel
-itself on the corpus's ~55-token median docs (guide §1.2 step 2: per-task
-work). Values are bit-identical: the same per-doc arrays are concatenated,
-never recomputed.
+Batch assembly: the adapter reads each batch's tokens as zero-copy views
+and emits ONE RecordBatch per Arrow batch, doc_id taken from the input
+key array and every other column one concatenate of the per-doc arrays.
+A one-DataFrame-per-doc shape paid ~1 ms of pandas construction per doc —
+more than the kernel itself on the corpus's ~55-token median docs. Values
+are bit-identical: the same per-doc arrays are concatenated, never
+recomputed.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..kernels.window import movmax, movmean, movmin, movstd, movsum_ogita, muinvn
+from .arrow_docs import map_docs
+from .mp_exact import _self_join, _win_stats
 
 SLIDING_SCHEMA = T.StructType(
     [
@@ -43,52 +44,29 @@ SLIDING_SCHEMA = T.StructType(
 )
 
 
-def _assemble(ids: list, lens: list[int], cols: dict[str, list[np.ndarray]],
-              schema: T.StructType) -> pd.DataFrame:
-    """One DataFrame for a whole batch: doc_id repeated per doc's row
-    count, every other column a single concatenate of the per-doc
-    arrays."""
-    if not ids:
-        return pd.DataFrame(
-            {f.name: pd.Series(dtype=object) for f in schema.fields})
-    n = np.asarray(lens, dtype=np.int64)
-    out = {"doc_id": np.repeat(np.asarray(ids, dtype=object), n)}
-    for name, parts in cols.items():
-        out[name] = np.concatenate(parts)
-    return pd.DataFrame(out)
-
-
 def sliding_stats(tokens_df: DataFrame, w: int) -> DataFrame:
     """Per-window trailing stats, one row per (doc, window-start offset).
 
     mov_sum/mov_mean/mov_std/mov_min/mov_max/muinvn-sig per
     src/windowfunc.cpp semantics (result aligned to window start)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids: list = []
-            lens: list[int] = []
-            cols: dict[str, list[np.ndarray]] = {
-                k: [] for k in ("off", "sum_v", "sumsq", "mean", "std",
-                                "sig", "min_v", "max_v")}
-            for doc_id, toks in zip(b["doc_id"], b["tokens"]):
-                x = np.asarray(toks, dtype=np.float64)
-                n = x.size
-                if n < w:
-                    continue
-                ids.append(doc_id)
-                lens.append(n - w + 1)
-                cols["off"].append(np.arange(n - w + 1, dtype=np.int32))
-                cols["sum_v"].append(movsum_ogita(x, w).astype(np.int64))
-                cols["sumsq"].append(movsum_ogita(x * x, w).astype(np.int64))
-                cols["mean"].append(movmean(x, w, "ogita"))
-                cols["std"].append(movstd(x, w))
-                cols["sig"].append(muinvn(x, w)["sig"])
-                cols["min_v"].append(movmin(x, w).astype(np.int32))
-                cols["max_v"].append(movmax(x, w).astype(np.int32))
-            yield _assemble(ids, lens, cols, SLIDING_SCHEMA)
+    def kernel(toks):
+        x = np.asarray(toks, dtype=np.float64)
+        n = x.size
+        if n < w:
+            return None
+        return {
+            "off": np.arange(n - w + 1, dtype=np.int32),
+            "sum_v": movsum_ogita(x, w).astype(np.int64),
+            "sumsq": movsum_ogita(x * x, w).astype(np.int64),
+            "mean": movmean(x, w, "ogita"),
+            "std": movstd(x, w),
+            "sig": muinvn(x, w)["sig"],
+            "min_v": movmin(x, w).astype(np.int32),
+            "max_v": movmax(x, w).astype(np.int32),
+        }
 
-    return tokens_df.select("doc_id", "tokens").mapInPandas(kernel, schema=SLIDING_SCHEMA)
+    return map_docs(tokens_df, "doc_id", ["tokens"], kernel, SLIDING_SCHEMA)
 
 
 ZC_SCHEMA = T.StructType(
@@ -104,23 +82,15 @@ def zero_crossings(tokens_df: DataFrame, w: int) -> DataFrame:
     """zero_crossing windows (src/windowfunc.cpp:538-560) per doc."""
     from ..kernels.window import zero_crossing
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids: list = []
-            lens: list[int] = []
-            cols: dict[str, list[np.ndarray]] = {"off": [], "crossings": []}
-            for doc_id, toks in zip(b["doc_id"], b["tokens"]):
-                x = np.asarray(toks, dtype=np.float64)
-                if x.size < w:
-                    continue
-                zc = zero_crossing(x, w)
-                ids.append(doc_id)
-                lens.append(zc.size)
-                cols["off"].append(np.arange(zc.size, dtype=np.int32))
-                cols["crossings"].append(zc.astype(np.int32))
-            yield _assemble(ids, lens, cols, ZC_SCHEMA)
+    def kernel(toks):
+        x = np.asarray(toks, dtype=np.float64)
+        if x.size < w:
+            return None
+        zc = zero_crossing(x, w)
+        return {"off": np.arange(zc.size, dtype=np.int32),
+                "crossings": zc.astype(np.int32)}
 
-    return tokens_df.select("doc_id", "tokens").mapInPandas(kernel, schema=ZC_SCHEMA)
+    return map_docs(tokens_df, "doc_id", ["tokens"], kernel, ZC_SCHEMA)
 
 
 DIST_SCHEMA = T.StructType(
@@ -141,41 +111,28 @@ def mass_profile_exact(tokens_df: DataFrame, w: int, query_off: int = 0) -> Data
     of the same math.) Zero-variance windows are omitted, mirroring the
     sd < eps -> +Inf masking (src/stomp.cpp:133-138)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids: list = []
-            lens: list[int] = []
-            cols: dict[str, list[np.ndarray]] = {"off": [], "dist": []}
-            for doc_id, toks in zip(b["doc_id"], b["tokens"]):
-                xi = np.asarray(toks, dtype=np.int64)
-                n = xi.size
-                if n < w or n < query_off + w:
-                    continue
-                plen = n - w + 1
-                s = movsum_ogita(xi, w).astype(np.int64)
-                s2 = movsum_ogita(xi * xi, w).astype(np.int64)
-                mu = s / float(w)
-                sd = np.sqrt(s2 / float(w) - mu * mu)
-                q = xi[query_off : query_off + w]
-                # exact sliding dot products: w * max_tok^2 << 2^53, so
-                # float64 BLAS returns bit-identical integer-valued doubles
-                windows = np.lib.stride_tricks.sliding_window_view(xi, w)
-                qt = windows.astype(np.float64) @ q.astype(np.float64)
-                mu_q, sd_q = mu[query_off], sd[query_off]
-                if not sd_q > 0:
-                    continue
-                ok = sd > 0
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    dist = 2 * (w - (qt - w * mu_q * mu) / (sd_q * sd))
-                dist[dist < 0] = 0  # clip, src/mass.cpp:116
-                offs = np.arange(plen, dtype=np.int32)[ok]
-                ids.append(doc_id)
-                lens.append(offs.size)
-                cols["off"].append(offs)
-                cols["dist"].append(dist[ok])
-            yield _assemble(ids, lens, cols, DIST_SCHEMA)
+    def kernel(toks):
+        xi = np.asarray(toks, dtype=np.int64)
+        n = xi.size
+        if n < w or n < query_off + w:
+            return None
+        plen = n - w + 1
+        _, _, mu, sd = _win_stats(xi, w)
+        q = xi[query_off : query_off + w]
+        # exact sliding dot products: w * max_tok^2 << 2^53, so
+        # float64 BLAS returns bit-identical integer-valued doubles
+        windows = np.lib.stride_tricks.sliding_window_view(xi, w)
+        qt = windows.astype(np.float64) @ q.astype(np.float64)
+        mu_q, sd_q = mu[query_off], sd[query_off]
+        if not sd_q > 0:
+            return None
+        ok = sd > 0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            dist = 2 * (w - (qt - w * mu_q * mu) / (sd_q * sd))
+        dist[dist < 0] = 0  # clip, src/mass.cpp:116
+        return {"off": np.arange(plen, dtype=np.int32)[ok], "dist": dist[ok]}
 
-    return tokens_df.select("doc_id", "tokens").mapInPandas(kernel, schema=DIST_SCHEMA)
+    return map_docs(tokens_df, "doc_id", ["tokens"], kernel, DIST_SCHEMA)
 
 
 MP_SCHEMA = T.StructType(
@@ -200,46 +157,14 @@ def matrix_profile_exact(tokens_df: DataFrame, w: int, ez: float = 0.5) -> DataF
 
     exclusion = c_round(w * ez + np.finfo(np.float64).eps)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids: list = []
-            lens: list[int] = []
-            cols: dict[str, list[np.ndarray]] = {"off": [], "mp": [],
-                                                 "nn_off": []}
-            for doc_id, toks in zip(b["doc_id"], b["tokens"]):
-                xi = np.asarray(toks, dtype=np.int64)
-                n = xi.size
-                if n < 2 * w:
-                    continue
-                plen = n - w + 1
-                s = movsum_ogita(xi, w).astype(np.int64)
-                s2 = movsum_ogita(xi * xi, w).astype(np.int64)
-                mu = s / float(w)
-                sd = np.sqrt(s2 / float(w) - mu * mu)
-                ok = sd > 0
-                wf = np.lib.stride_tricks.sliding_window_view(xi, w).astype(np.float64)
-                # all-pairs exact dot products via BLAS (integer-valued
-                # doubles stay exact below 2^53 — bit-identical to int64)
-                qt = wf @ wf.T
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    dist = 2 * (w - (qt - w * mu[:, None] * mu[None, :])
-                                / (sd[:, None] * sd[None, :]))
-                dist[dist < 0] = 0  # clip, src/stomp.cpp:119
-                dist[~ok, :] = np.inf
-                dist[:, ~ok] = np.inf
-                idx = np.arange(plen)
-                band = np.abs(idx[:, None] - idx[None, :]) <= exclusion
-                dist[band] = np.inf
-                finite = np.isfinite(dist).any(axis=1) & ok
-                if not finite.any():
-                    continue
-                nn = np.argmin(dist, axis=1)
-                mp = np.sqrt(dist[idx, nn])
-                ids.append(doc_id)
-                lens.append(int(finite.sum()))
-                cols["off"].append(idx[finite].astype(np.int32))
-                cols["mp"].append(mp[finite])
-                cols["nn_off"].append(nn[finite].astype(np.int32))
-            yield _assemble(ids, lens, cols, MP_SCHEMA)
+    def kernel(toks):
+        xi = np.asarray(toks, dtype=np.int64)
+        if xi.size < 2 * w:
+            return None
+        _, finite, nn, mp = _self_join(xi, w, exclusion)
+        if not finite.any():
+            return None
+        return {"off": np.flatnonzero(finite).astype(np.int32),
+                "mp": mp[finite], "nn_off": nn[finite].astype(np.int32)}
 
-    return tokens_df.select("doc_id", "tokens").mapInPandas(kernel, schema=MP_SCHEMA)
+    return map_docs(tokens_df, "doc_id", ["tokens"], kernel, MP_SCHEMA)

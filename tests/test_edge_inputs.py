@@ -6,7 +6,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from matrixprofiler_spark.operators import mp_exact, windows
+from matrixprofiler_spark.operators.arrow_docs import map_docs
 from matrixprofiler_spark.operators.rollup import (
     finest_rollup,
     gap_fill,
@@ -14,7 +17,10 @@ from matrixprofiler_spark.operators.rollup import (
     window_stats,
     with_derived_stats,
 )
-from matrixprofiler_spark.operators.mp_ops import matrix_profile_blobs
+from matrixprofiler_spark.operators.mp_ops import (
+    matrix_profile_blobs,
+    matrix_profile_distributed,
+)
 from matrixprofiler_spark.sources.tokens import TOKENS_SCHEMA
 
 
@@ -91,6 +97,77 @@ def test_gap_fill_edge(spark, edge_tokens):
     const_rows = filled.filter(F.col("doc_id") == "const").collect()
     assert len(const_rows) == 400 // 60 + 1
     assert sum(r.filled for r in const_rows) == len(const_rows) - 1
+
+
+# Every operator on the Arrow adapter: (run, declared schema, pair face).
+# The pair faces pair doc 2k with 2k+1, so they run on numbered doc ids:
+# "0|1" is the (tiny, two) pair.
+_DIST_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType(), False),
+    T.StructField("off", T.IntegerType(), False),
+    T.StructField("mp", T.DoubleType(), True),
+    T.StructField("nn_off", T.IntegerType(), True),
+])
+ADAPTER_OPS = {
+    "sliding_stats": (lambda t: windows.sliding_stats(t, 8),
+                      windows.SLIDING_SCHEMA, False),
+    "zero_crossings": (lambda t: windows.zero_crossings(t, 16),
+                       windows.ZC_SCHEMA, False),
+    "mass_profile_exact": (lambda t: windows.mass_profile_exact(t, 8, 3),
+                           windows.DIST_SCHEMA, False),
+    "matrix_profile_exact": (lambda t: windows.matrix_profile_exact(t, 8),
+                             windows.MP_SCHEMA, False),
+    "mp_dist_face": (lambda t: mp_exact.mp_dist_face(t, 8, left_right=True),
+                     mp_exact.MP_LR_SCHEMA, False),
+    "mp_pearson_face": (lambda t: mp_exact.mp_pearson_face(t, 8),
+                        mp_exact.MP_FACE_SCHEMA, False),
+    "mpxab_face": (lambda t: mp_exact.mpxab_face(t, 8),
+                   mp_exact.AB_SCHEMA, True),
+    "contrast_face": (lambda t: mp_exact.contrast_face(t, 8),
+                      mp_exact.CP_SCHEMA, True),
+    "mass_face": (lambda t: mp_exact.mass_face(t, 8, kind="weighted"),
+                  mp_exact.MASS_SCHEMA, False),
+    "mov_exp_face": (lambda t: mp_exact.mov_exp_face(t, 8),
+                     mp_exact.MOV_EXP_SCHEMA, False),
+    "matrix_profile_distributed": (
+        lambda t: matrix_profile_distributed(t, 8, chunk_len=24),
+        _DIST_SCHEMA, False),
+}
+
+
+@pytest.mark.parametrize("name", sorted(ADAPTER_OPS))
+def test_adapter_contract(spark, edge_tokens, name):
+    """Each long-form operator keeps its declared schema through the Arrow
+    adapter, emits nothing for the docs too short for its window, and an
+    input whose every doc is skipped yields 0 rows (empty batches)."""
+    run, schema, pairs = ADAPTER_OPS[name]
+    tokens = edge_tokens
+    short = {"tiny", "two"}
+    if pairs:
+        num = F.create_map(*[F.lit(x) for kv in (
+            ("tiny", "0"), ("two", "1"), ("ramp", "2"), ("alt", "3"),
+            ("const", "4"), ("big_vals", "5")) for x in kv])
+        tokens = edge_tokens.withColumn("doc_id", num[F.col("doc_id")])
+        short = {"0|1"}
+    out = run(tokens)
+    assert out.schema == schema
+    keys = {r[0] for r in out.collect()}
+    assert keys and not keys & short
+    only_short = tokens.filter(F.col("n_tok") <= 2)
+    assert run(only_short).count() == 0
+
+
+def test_adapter_nan_is_null(spark, edge_tokens):
+    """A NaN in a float column comes back as NULL, as through mapInPandas;
+    the key repeats once per emitted row."""
+    schema = T.StructType([T.StructField("doc_id", T.StringType(), False),
+                           T.StructField("v", T.DoubleType(), True)])
+    t = map_docs(edge_tokens, "doc_id", ["tokens"],
+                 lambda toks: {"v": np.full(toks.size, np.nan)},
+                 schema).toArrow()
+    assert t.num_rows == 1 + 2 + 400 + 100 + 61 + 100
+    assert t.column("v").null_count == t.num_rows
+    assert t.column("doc_id").to_pylist().count("const") == 400
 
 
 def test_lttb_lockstep_matches_per_doc_reference(spark):
